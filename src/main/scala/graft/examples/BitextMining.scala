@@ -41,8 +41,9 @@ object BitextMining {
     * around mine()'s (6, 4) geometry on a corpus sample and report
     * which configs clear `recallFloorPpm` at what candidate cost —
     * run this BEFORE committing a geometry to a 100 TB mining job
-    * (ScaleMutual measured 6×4 losing under 64 clusters while 6×8
-    * wins; the knob is corpus-dependent, so measure, don't guess).
+    * (PLANS.md round 12: under 64 clusters 6×4 lost at every size —
+    * 61.6 s vs 6×8's 47.9 s and the exhaustive 40.9 s at 32k; the
+    * knob is corpus-dependent, so measure, don't guess).
     * Pick the cheapest passing row's (tables, planes) for [[mine]].
     */
   def calibrate(left: DataFrame, right: DataFrame,

@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.core.Sessions
 import graft.sink.ParquetTarget
-import org.apache.spark.sql.SparkSession
 
 /** Runnable port of the reference's example driver
   * (reference example/run_example.py): executes [[FactCustomerTask]]
@@ -16,14 +16,9 @@ object RunExample {
     val outDir =
       if (args.length > 1) args(1) else
         java.nio.file.Files.createTempDirectory("graft_example").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = Sessions.local(4)
       .appName("graft-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val target = ParquetTarget(outDir)
     val task = new FactCustomerTask(spark,

@@ -96,19 +96,13 @@ object Bpe {
   final case class Learned(merges: DataFrame, finalSyms: DataFrame)
 
   /** Learn `k` merges over the corpus. merges = (merge_rank BIGINT,
-    * lhs, rhs, pair_cnt BIGINT) in learning order.
+    * lhs, rhs, pair_cnt BIGINT) in learning order. Only the
+    * word-frequency table scans the corpus; the merge loop runs over
+    * it, so its cost is bounded by the vocabulary, not the corpus.
     */
   def learnMerges(spark: SparkSession, docs: DataFrame, textCol: String,
-      k: Int): Learned =
-    learnMergesFrom(spark, wordFreq(docs, textCol), k)
-
-  /** Learning from a prebuilt word-frequency table — the phase whose
-    * cost is VOCABULARY-bounded, independent of corpus size
-    * (ScaleBpe measures the separation).
-    */
-  def learnMergesFrom(spark: SparkSession, wf: DataFrame,
       k: Int): Learned = {
-    var syms = initialSymbols(wf).localCheckpoint()
+    var syms = initialSymbols(wordFreq(docs, textCol)).localCheckpoint()
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var i = 1
     var exhausted = false

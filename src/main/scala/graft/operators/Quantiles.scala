@@ -14,16 +14,17 @@ import org.apache.spark.sql.functions._
   * `(hi − lo)/bins` — at 256 bins, ~0.4 % of the value range.
   *
   * This is the honest equi-width contract, stated precisely (the
-  * first cut overstated it and ScaleQuantiles caught the violation):
+  * first cut overstated it and a 50M-row scale run caught the
+  * violation, PLANS.md round 9):
   * the band of pct p contains the `ceil(p·n/100)`-th ORDER STATISTIC
   * — the type-1 / lower exact quantile — up to one IEEE ulp of the
   * edge expression (the order stat was ASSIGNED its bin by the same
   * floor arithmetic; only re-deriving the edge can wobble an ulp).
   * The INTERPOLATED (type-7, `percentile`/`quantile_cont`) quantile
   * averages toward the NEXT order statistic and can therefore exceed
-  * the band by up to one inter-value gap — measured in ScaleQuantiles,
+  * the band by up to one inter-value gap — measured at 50M rows,
   * where the interpolated median of a 2-valued straddle lands 0.0005
-  * above the selected bin's edge. Spec and harness pin the type-1
+  * above the selected bin's edge. QuantilesSpec pins the type-1
   * containment. Resolution is in value-range units, not rank units
   * (heavy skew into one bin widens the effective rank resolution —
   * use a second refinement pass over the one hot bin when rank

@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   * broadcast side; the binned join's work is Σ_interval (len/binDays
   * + 1) candidate fan-out, hash-partitioned on the bin key — the
   * shuffle-parallel shape that survives a 100× scale-up. Choose
-  * binDays ≈ the median interval length (fan-out ~2 bins/interval);
-  * ScaleRange measures the crossover.
+  * binDays ≈ the median interval length (fan-out ~2 bins/interval).
+  * Measured on 100k events (PLANS.md round 10): nested loop
+  * 0.40/2.43/36.05 s vs binned 0.35/0.70/7.73 s at 25/400/6400
+  * windows, identical pairs.
   */
 object RangeJoin {
 

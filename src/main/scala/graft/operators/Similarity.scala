@@ -25,8 +25,8 @@ object Similarity {
 
   /** The warning [[ivfPqResidualTopK]] logs when called with untrained
     * (lowest-id seeded) coarse centroids — a MEASURED recall downgrade
-    * versus the simpler global-codebook [[ivfPqTopK]] (tools/RecallAb:
-    * recall@10 0.092 seeded-residual vs 0.120 global @ nprobe 2;
+    * versus the simpler global-codebook [[ivfPqTopK]] (PLANS.md round
+    * 6: recall@10 0.092 seeded-residual vs 0.120 global @ nprobe 2;
     * trained ≥3 iters overtakes both at 0.162): residual encoding
     * amplifies coarse-quantizer quality, so residuals from bad
     * centroids carry MORE variance than the raw vectors. The seeded
@@ -42,7 +42,7 @@ object Similarity {
       "centroids): residual encoding with untrained coarse centroids " +
       "measurably UNDERPERFORMS the global-codebook ivfPqTopK " +
       "(recall@10 0.092 vs 0.120 on the reference corpus — " +
-      "tools/RecallAb). Pass trainIters >= 3 for production use; the " +
+      "PLANS.md round 6). Pass trainIters >= 3 for production use; the " +
       "seeded path exists for deterministic oracle replay.")
 
   private def darr(c: Column): Column = c.cast("array<double>")
@@ -395,8 +395,8 @@ object Similarity {
     * the probed cells cover every vector's true top-1 (always at
     * `nprobe = nCentroids`, where this is spec-pinned ≡ the exact
     * arm), the result IS the exact answer; below that, recall follows
-    * the IVF S-curve (measure with tools/RecallAb on your corpus
-    * before trusting a (nCentroids, nprobe) config — the q183
+    * the IVF S-curve (measure recall against the exact arm on your
+    * corpus before trusting a (nCentroids, nprobe) config — the q183
     * calibration discipline). `trainIters > 0` refines the cells by
     * spherical k-means ([[trainedCentroids]]) for production recall;
     * the seeded default keeps the whole pipeline oracle-replayable.
@@ -748,8 +748,8 @@ object Similarity {
       .distinct()
   }
 
-  /** LSH geometry auto-calibration — the measurement ScaleMutual
-    * proved is make-or-break (6×4 planes LOSE under 64 clusters, 6×8
+  /** LSH geometry auto-calibration — the measurement PLANS.md round
+    * 12 proved is make-or-break (6×4 planes LOSE under 64 clusters, 6×8
     * win at 32k): for each `(tables, planesPerTable)` config in the
     * ladder, measured on a deterministic SAMPLE of both corpora
     * (`idCol % sampleMod = 0` — sampling is what makes the exact
@@ -1100,7 +1100,9 @@ object Similarity {
     * catalog queries keep deterministic lowest-id seeds so the DuckDB
     * oracle can replay every assignment, and training changes WHICH
     * centroids the plan broadcasts — never the plan shape.
-    * tools/ScaleSemDedup measures the recall delta.
+    * Measured (PLANS.md round 6): on id-clustered corpora 3 Lloyd
+    * iterations lift semDedup recall from ~0.90 to ≥ 0.994 at ~2×
+    * wall; where seeds already span the families they buy nothing.
     *
     * Scale shape: each iteration is one broadcast-assign pass
     * (map-side max_by, no shuffle of the corpus beyond the partial
@@ -1791,7 +1793,7 @@ object Similarity {
     * measured around the local cell origin — sharper codes where cells
     * are tight, the reason FAISS defaults to residual encoding.
     *
-    * Measured caveat (tools/RecallAb, PLANS.md round 6): residual
+    * Measured caveat (PLANS.md round 6): residual
     * encoding AMPLIFIES coarse-quantizer quality. With the default
     * deterministic lowest-id seeds it UNDERPERFORMS the global-codebook
     * [[ivfPqTopK]] (residuals from bad centroids carry more variance

@@ -173,7 +173,8 @@ object Unigram {
     * derives a production ladder from a seed estimate. Every round is
     * vocabulary-bounded and localCheckpoint'd (flat lineage), so a
     * deep ladder costs rounds × the flat per-iteration price
-    * (ScaleUnigram measured it flat across 16× corpus growth).
+    * (PLANS.md round 13 measured training flat, 1.07 → 0.80 s, across
+    * 16× corpus growth).
     */
   def trainLadder(wf0: DataFrame, maxPieceLen: Int,
       vocabLadder: Seq[Int], emItersPerRound: Int = 1): DataFrame = {

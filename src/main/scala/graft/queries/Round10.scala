@@ -47,8 +47,9 @@ object Round10 {
     // (the oracle is deliberately the naive all-pairs SQL), candidate
     // generation bounded by Σ df_pfx(s)·df(s) — the contained side's
     // rarest-shingle prefix keeps corpus-wide boilerplate out of the
-    // join (DedupSpec pins prefix ≡ naive; ScaleContain measures the
-    // bounded curve)
+    // join (DedupSpec pins prefix ≡ naive; PLANS.md round 10 measured
+    // 2.22/7.87/21.67 s at 5k/30k/100k docs vs uncapped 4.69/255.51 s
+    // at 5k/30k)
     // consumes the q244 shared ranked-shingle artifact (contained-side
     // prefix, container side, and verification frames are all
     // projections/filters of it — zero corpus passes here)
@@ -180,7 +181,8 @@ object Round10 {
 
     // ---- ADC search over the TRAINED codebook (q84's shape with the
     // q163 Lloyd pass swapped in): training changes WHICH centroids
-    // broadcast, never the plan — RecallAb measures the recall lift
+    // broadcast, never the plan — recall@10 0.136 → 0.184 at 3
+    // iterations (PLANS.md round 10)
     QueryDef("q164_pq_adc_trained",
       (s, dir) => {
         val emb = t("embeddings")(s, dir)
@@ -1038,7 +1040,8 @@ object Round10 {
     // campaign windows — the shape Spark can only nested-loop. The
     // binned rewrite is an EQUI join on time bins (each pair
     // generated once, exact between-filter after); the oracle runs
-    // the naive between join. ScaleRange measures the crossover.
+    // the naive between join. PLANS.md round 10: 36.05 s → 7.73 s at
+    // 6400 windows, identical pairs.
     QueryDef("q186_range_join_binned",
       (s, dir) => {
         val windows = t("nation")(s, dir)

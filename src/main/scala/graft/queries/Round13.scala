@@ -424,7 +424,7 @@ object Round13 {
               |FROM seg3 s JOIN wf USING (word)
               |ORDER BY s.word, seq""".stripMargin)),
 
-    // ---- LSH geometry auto-calibration (the ScaleMutual lesson
+    // ---- LSH geometry auto-calibration (the PLANS.md round-12 lesson
     // operationalized: plane count is make-or-break and
     // corpus-dependent, so MEASURE the ladder before a 100 TB mining
     // job): for (2,4)/(6,4)/(6,8) over a deterministic sample of the

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * before this the ~2 s build hid in the first consumer's cold pass and
   * the bench headline never charged it, VERDICT r8 #3), and the
   * trained-cells RESIDUAL IVF-PQ search under the oracle (the
-  * catalog's last seeded-only path, and the architecture RecallAb
-  * showed gains most from training).
+  * catalog's last seeded-only path, and the architecture PLANS.md
+  * round 6 showed gains most from training).
   */
 object Round9 {
   private def t(name: String): QueryFn = (s, dir) => Tables.load(s, dir, name)
@@ -106,9 +106,9 @@ object Round9 {
 
     // ---- TRAINED-cells residual IVF-PQ end-to-end under the oracle:
     // q101 closed the seeded-only gap for the global-codebook search;
-    // this closes it for the RESIDUAL architecture — the one RecallAb
-    // showed amplifies centroid quality most (recall@10 0.092 seeded
-    // vs 0.162 trained). The oracle composes q91/q101's 2-iteration
+    // this closes it for the RESIDUAL architecture — the one PLANS.md
+    // round 6 showed amplifies centroid quality most (recall@10 0.092
+    // seeded vs 0.162 trained). The oracle composes q91/q101's 2-iteration
     // Lloyd replay CTEs verbatim with q88's per-cell residual CTEs:
     // residuals, codebooks, codes, and per-cell ADC tables all derive
     // from the TRAINED cells, so training and residual search cannot

@@ -153,7 +153,8 @@ object Compact {
     * the whole tree with two renames. The per-leaf alternative costs
     * one sequential job per partition — 2^14 jobs at a production
     * bucket count; this is the purge shape that survives scale
-    * (ScaleFpIndex measured 14 s → ~2 s at 64 buckets, toy data).
+    * (PLANS.md round 14 measured the fingerprint purge 14.2 s →
+    * 1.29 s at 64 buckets, toy data).
     * Partitions whose rows are all dropped simply have no directory
     * in the result — absent partition ≡ zero rows to every reader.
     * Crash discipline + the drop-everything edge as on

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.Sessions
 import graft.operators.Retrieval
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale experiment: exhaustive vs max-score-pruned BM25 top-k as the
@@ -28,14 +28,7 @@ object ScaleWand {
     val sizes = args.headOption.getOrElse("20000,80000,320000")
       .split(",").map(_.trim.toInt).toSeq
     val vocab = args.lift(1).map(_.toInt).getOrElse(256)
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local().getOrCreate()
 
     // two batches A/B'd separately — max-score's payoff is
     // selectivity-dependent and a mixed batch hides it behind the
@@ -141,7 +134,7 @@ object ScaleWand {
         time(s"[docq] ad-hoc shared-frame qb=$qb n=$n") {
           noop(Retrieval.topKFromScores(
             Retrieval.bm25ScoresFrame(docs, "doc_id", "text", qdf,
-              tf = Some(tf)), 10))
+              tf = Some(tf), wide = true), 10))
         }
         time(s"[docq] on-disk pruned qb=$qb n=$n") {
           noop(Retrieval.bm25TopKPrunedFromIndex(spark, idxDir, batch,

@@ -1,33 +1,35 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Per-stage time attribution for one catalog query (optimization
-  * rounds, guide §1/§7): runs the named query under the Bench session
-  * config with a stage listener and prints every completed stage's
-  * wall time, task count, and shuffle/input volumes, so "where do the
-  * seconds go" is a read instead of a guess.
+/** Plan dump and per-stage time attribution for catalog queries
+  * (optimization rounds, guide §1/§7), under the session config and
+  * warm-pass methodology Bench uses, so its numbers are comparable to
+  * the bench floors.
   *
-  * `runMain graft.tools.StageProfile <query> [sfDir] [reps]`
+  * `runMain graft.tools.StageProfile <suffix> <q1,q2,...> [sfDir] [outDir] [reps]`
+  *
+  * Names resolve exactly or by prefix (`q274` → `q274_retrieval_metrics`).
+  * For each query: writes `.explain("formatted")` to
+  * `<outDir>/<name>_<suffix>.txt` (the plan evidence), then times
+  * `reps` noop-sink evaluations, printing each rep's wall time and the
+  * minimum, and for the last rep every completed stage's wall time,
+  * CPU, task count and input/shuffle volumes, so "where do the
+  * seconds go" is a read instead of a guess.
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val name0 = args.headOption.getOrElse("q1_agg")
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val suffix = args.headOption.getOrElse("before")
+    val names0 = args.lift(1).getOrElse("q1_agg")
+    val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
+    val outDir = args.lift(3).getOrElse("plans")
+    val reps = args.lift(4).map(_.toInt).getOrElse(2)
+    val spark = Sessions.local().getOrCreate()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
     val all = graft.SparkEntry.queries
-    val names = name0.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = names0.split(",").map(_.trim).filter(_.nonEmpty).toSeq
       .flatMap { n =>
         val r = all.keys.find(_ == n).orElse(all.keys.find(_.startsWith(n)))
         if (r.isEmpty)
@@ -36,7 +38,10 @@ object StageProfile {
       }
     if (names.isEmpty) return
 
-    // warm pass on the small dir (Bench methodology)
+    // Bench-methodology warm-up: run every selected query once on the
+    // small warm dir so codegen/JIT happens outside the timed region
+    // (without this, a query's position in the list changes its
+    // number by 20-40% — measured, optimization round 19).
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     names.foreach { name =>
@@ -55,8 +60,7 @@ object StageProfile {
     val stageSite =
       new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val listener = new SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
         val site = Option(e.properties)
           .flatMap(p => Option(p.getProperty("callSite.short")))
           .getOrElse("")
@@ -82,40 +86,57 @@ object StageProfile {
 
     names.foreach { name =>
       val fn = all(name)
-      (1 to reps).foreach { r =>
-        stages.clear()
-        spark.sparkContext.addSparkListener(listener)
-        spark.sparkContext.setJobDescription(s"$name rep$r")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
+      val plan = s"$outDir/${name}_$suffix.txt"
+      try {
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(plan),
+          fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
         spark.catalog.clearCache()
-        // drain listener events before reading (the bus is async; the
-        // private waitUntilEmpty is not accessible). A fixed sleep
-        // silently dropped late stage-completed events on loaded
-        // boxes, understating stage-sum vs wall — poll until the
-        // stage count stabilizes instead, with a generous bound
-        // (round-20 hardening, ADVICE).
-        var lastN = -1
-        var settledPolls = 0
-        var waitedMs = 0
-        while (settledPolls < 3 && waitedMs < 5000) {
-          Thread.sleep(100); waitedMs += 100
-          val n = stages.size()
-          if (n == lastN) settledPolls += 1
-          else { settledPolls = 0; lastN = n }
+        // timed passes: rebuild the frame each time (same as Bench)
+        val ts = (1 to reps).map { r =>
+          stages.clear()
+          spark.sparkContext.addSparkListener(listener)
+          spark.sparkContext.setJobDescription(s"$name rep$r")
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val dt = (System.nanoTime() - t0) / 1e9
+          spark.catalog.clearCache()
+          // drain listener events before reading (the bus is async; the
+          // private waitUntilEmpty is not accessible). A fixed sleep
+          // silently dropped late stage-completed events on loaded
+          // boxes, understating stage-sum vs wall — poll until the
+          // stage count stabilizes instead, with a generous bound
+          // (round-20 hardening).
+          var lastN = -1
+          var settledPolls = 0
+          var waitedMs = 0
+          while (settledPolls < 3 && waitedMs < 5000) {
+            Thread.sleep(100); waitedMs += 100
+            val n = stages.size()
+            if (n == lastN) settledPolls += 1
+            else { settledPolls = 0; lastN = n }
+          }
+          spark.sparkContext.removeSparkListener(listener)
+          import scala.jdk.CollectionConverters._
+          val ss = stages.asScala.toSeq.sortBy(-_.ms)
+          val sumMs = ss.map(_.ms).sum
+          println(f"%n[stageprofile] $name rep$r wall=$dt%.3f s  " +
+            f"stage-sum=${sumMs / 1000.0}%.3f s  stages=${ss.size}")
+          if (r == reps) ss.take(22).foreach { s =>
+            println(f"  stage ${s.id}%4d ${s.ms}%6d ms cpu=${s.cpuMs}%6d ms " +
+              f"tasks=${s.tasks}%3d in=${s.inMb}%8.2f MB sr=${s.srMb}%8.2f " +
+              f"sw=${s.swMb}%8.2f  ${s.nm.take(90)}")
+          }
+          dt
         }
-        spark.sparkContext.removeSparkListener(listener)
-        import scala.jdk.CollectionConverters._
-        val ss = stages.asScala.toSeq.sortBy(-_.ms)
-        val sumMs = ss.map(_.ms).sum
-        println(f"%n[stageprofile] $name rep$r wall=$dt%.3f s  " +
-          f"stage-sum=${sumMs / 1000.0}%.3f s  stages=${ss.size}")
-        if (r == reps) ss.take(22).foreach { s =>
-          println(f"  stage ${s.id}%4d ${s.ms}%6d ms cpu=${s.cpuMs}%6d ms " +
-            f"tasks=${s.tasks}%3d in=${s.inMb}%8.2f MB sr=${s.srMb}%8.2f " +
-            f"sw=${s.swMb}%8.2f  ${s.nm.take(90)}")
-        }
+        val walls = ts.map(t => f"$t%.3f").mkString(" ")
+        println(f"[stageprofile] $name%-34s min=${ts.min}%7.3f s  reps=[$walls]  plan=$plan")
+      } catch {
+        case e: Throwable =>
+          spark.sparkContext.removeSparkListener(listener)
+          println(s"[stageprofile] $name FAILED: ${e.getMessage}")
+      } finally {
+        try spark.catalog.clearCache() catch { case _: Throwable => () }
       }
     }
     spark.stop()

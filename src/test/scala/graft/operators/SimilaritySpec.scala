@@ -121,7 +121,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfPqResidualTopK warns on the seeded (trainIters=0) path only") {
-    // the measured recall trap (tools/RecallAb): seeded residual PQ
+    // the measured recall trap (PLANS.md round 6): seeded residual PQ
     // underperforms the global codebook; the warning nudges production
     // callers toward trainedCentroids while the catalog keeps the
     // oracle-replayable seeded shape

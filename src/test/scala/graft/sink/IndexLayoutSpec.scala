@@ -103,4 +103,46 @@ class IndexLayoutSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
   }
+
+  test("metaRow: a failed meta listing never validates a cached row " +
+      "(a rebuilt layout is re-read, not served stale)") {
+    val dir = java.nio.file.Files.createTempDirectory("metarow").toString
+    def writeMeta(n: Int): Unit =
+      spark.range(1).select(lit(n).as("n_buckets"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    spark.sparkContext.hadoopConfiguration.set("fs.flakylist.impl",
+      classOf[FlakyListFs].getName)
+    val path = s"flakylist://$dir"
+    try {
+      writeMeta(4)
+      // the fingerprint listing fails while the row is cached...
+      FlakyListFs.failNext.set(1)
+      assert(IndexLayout.metaRow(spark, path).getInt(0) == 4)
+      assert(FlakyListFs.failNext.get == 0)
+      // ...and again after a rebuild under the same path
+      writeMeta(8)
+      FlakyListFs.failNext.set(1)
+      assert(IndexLayout.metaRow(spark, path).getInt(0) == 8)
+      assert(FlakyListFs.failNext.get == 0)
+    } finally {
+      FlakyListFs.failNext.set(0)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+}
+
+/** Local file system under the `flakylist:` scheme whose next
+  * `failNext` directory listings throw. */
+class FlakyListFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "flakylist"
+  override def getUri: java.net.URI = java.net.URI.create("flakylist:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] =
+    if (FlakyListFs.failNext.getAndUpdate(n => math.max(n - 1, 0)) > 0)
+      throw new java.io.IOException(s"listing $f failed (injected)")
+    else super.listStatus(f)
+}
+
+object FlakyListFs {
+  val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
 }
